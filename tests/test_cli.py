@@ -10,7 +10,8 @@ import datetime as dt
 import pytest
 
 from real_big_data_project_spark.__main__ import (
-    build_parser, cmd_bars, cmd_ingest, cmd_sql,
+    _bars_frame, _register_tables, build_parser, cmd_bars, cmd_compact,
+    cmd_ingest, cmd_sql,
 )
 from tests.test_pipeline import EURONEXT_ROWS, EURONEXT_SCHEMA, RAW_ROWS, RAW_SCHEMA
 
@@ -82,6 +83,111 @@ def test_cli_bars_with_bollinger(spark, ingested):
     res = cmd_bars(spark, args)
     assert res["n_rows"] == 1               # SOLV traded one day
     assert "boll_mean" in res["columns"]
+
+
+def test_cli_bars_range_prunes_day_partitions(spark, ingested):
+    """The chart range reaches the scan as a `day` partition filter, and
+    the rows are those of the `date` filter alone."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    _, out = ingested
+    args = build_parser().parse_args(
+        ["bars", "--tables", out, "--cid", "3", "--start", "2024-01-02"])
+    plan = _bars_frame(spark, args)._jdf.queryExecution().executedPlan()
+    assert re.search(r"PartitionFilters: \[[^\]]*\(day#\d+ >= 2024-01-02\)",
+                     plan.toString())
+    for start, n in (("2024-01-01", 1), ("2024-01-02", 0)):
+        args = build_parser().parse_args(
+            ["bars", "--tables", out, "--cid", "3", "--start", start,
+             "--end", "2024-01-01"])
+        ref = spark.read.parquet(f"{out}/daystocks").filter(
+            (F.col("cid") == 3)
+            & (F.col("date") >= F.lit(start).cast("date"))
+            & (F.col("date") <= F.lit("2024-01-01").cast("date")))
+        assert cmd_bars(spark, args)["n_rows"] == ref.count() == n
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Spark jobs `fn` fires, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-cli-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ingest_rows(spark, root, rows, out) -> dict:
+    snaps = str(root / f"snaps-{len(rows)}.parquet")
+    spark.createDataFrame(rows, RAW_SCHEMA).write.mode("overwrite").parquet(
+        snaps)
+    return cmd_ingest(spark, build_parser().parse_args(
+        ["ingest", "--snapshots", snaps, "--out", out]))
+
+
+def _sql_rows(spark, out, query) -> list:
+    return cmd_sql(spark, build_parser().parse_args(
+        ["sql", query, "--tables", out]))["rows"]
+
+
+def _bars_rows(spark, out, cid) -> list:
+    return cmd_bars(spark, build_parser().parse_args(
+        ["bars", "--tables", out, "--cid", str(cid)]))["rows"]
+
+
+def test_register_tables_reuses_scans_of_an_unchanged_warehouse(
+        spark, tmp_path):
+    out = str(tmp_path / "warehouse")
+    _ingest_rows(spark, tmp_path, RAW_ROWS, out)
+    assert _jobs_fired(spark, lambda: _register_tables(spark, out)) > 0
+    first = _sql_rows(spark, out, "SELECT count(*) FROM stocks")
+    assert _jobs_fired(spark, lambda: _register_tables(spark, out)) == 0
+    assert _sql_rows(spark, out, "SELECT count(*) FROM stocks") == first
+
+
+def test_register_tables_rereads_a_rewritten_warehouse(spark, tmp_path):
+    """compact and a second ingest rewrite the store under the memo; the
+    next requests list the new files and return the new rows."""
+    out = str(tmp_path / "warehouse")
+    ticks = "SELECT cid, date, value FROM stocks ORDER BY cid, date"
+    _ingest_rows(spark, tmp_path, RAW_ROWS, out)
+    before, bars = _sql_rows(spark, out, ticks), _bars_rows(spark, out, 1)
+    assert len(bars) == 2                    # ALO traded two days
+
+    cmd_compact(spark, build_parser().parse_args(
+        ["compact", "--path", f"{out}/stocks", "--target-rows", "1"]))
+    assert _sql_rows(spark, out, ticks) == before
+    assert _bars_rows(spark, out, 1) == bars
+
+    day3 = ("1rPALO", "SRD Alstom", "12,00", 160, "FR0000120198", "paris",
+            dt.datetime(2024, 1, 3, 9, 0))
+    _ingest_rows(spark, tmp_path, RAW_ROWS + [day3], out)
+    after = _sql_rows(spark, out, ticks)
+    assert len(after) == len(before) + 1
+    assert ["1", "2024-01-03 09:00:00", "12.0"] in after
+    # dates only: a rebuilt daystocks may differ in the last bits of its
+    # floating-point aggregates
+    assert [r[0] for r in _bars_rows(spark, out, 1)] == [
+        "2024-01-01", "2024-01-02", "2024-01-03"]
+
+
+def test_register_tables_new_session_gets_its_own_views(spark, tmp_path):
+    out = str(tmp_path / "warehouse")
+    _ingest_rows(spark, tmp_path, RAW_ROWS, out)
+    query = "SELECT cid, count(*) FROM stocks GROUP BY cid ORDER BY cid"
+    rows = _sql_rows(spark, out, query)
+    other = spark.newSession()
+    assert not [t for t in other.catalog.listTables() if t.isTemporary]
+    assert _sql_rows(other, out, query) == rows
+    assert other.table("stocks").sparkSession is other
+    assert spark.table("stocks").sparkSession is spark
 
 
 def test_cli_compact_and_delete_keys(spark, sf_dir, tmp_path, capsys):
